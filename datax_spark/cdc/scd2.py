@@ -69,7 +69,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from datax_spark.lake.table import bucket_expr
+from datax_spark.lake.table import PARQUET_CODEC, bucket_expr
 
 __all__ = ["scd2_snapshot", "scd2_lookup_join", "Scd2Table"]
 
@@ -292,7 +292,7 @@ class Scd2Table:
         path = os.path.join(self.root, "log", self._bdir(batch_id))
         changes.withColumn(
             "_bucket", bucket_expr(m["key_col"], m["num_buckets"])
-        ).write.mode("overwrite").parquet(path)
+        ).write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(path)
         m = self._meta()
         if batch_id not in m["applied"]:
             m["applied"] = sorted(m["applied"] + [batch_id])
@@ -427,7 +427,7 @@ class Scd2Table:
             hist_df = hist_df.where(
                 F.col("valid_to_ts").isNull() | (F.col("valid_to_ts") > cut)
             )
-        hist_df.write.mode("overwrite").parquet(ipath)
+        hist_df.write.mode("overwrite").option("compression", PARQUET_CODEC).parquet(ipath)
         new_hist = self.spark.read.parquet(ipath)
 
         # every delete in the table = cached deletes ∪ fresh-log deletes;
@@ -469,7 +469,8 @@ class Scd2Table:
                 *[F.lit(None).cast(new_hist.schema[c].dataType).alias(c) for c in attr_cols],
             )
             dangling = sample.limit(0)
-        dangling.write.mode("overwrite").parquet(dpath)
+        dangling.write.mode("overwrite").option(
+            "compression", PARQUET_CODEC).parquet(dpath)
 
         m = self._meta()
         covered = list(m["applied"])

@@ -188,10 +188,20 @@ _ENRICH_TYPE = T.StructType(
 )
 
 
+# pandas dtype per enrichment column type. bigint is nullable Int64: a
+# frame built from row tuples turns an int column holding a None (a null
+# html, e.g. a delete winner) into float64, which rounds the 64-bit fp.
+_PD_DTYPES = {"string": object, "bigint": "Int64", "double": "float64"}
+
+
 @pandas_udf(_ENRICH_TYPE)
 def enrich_udf(html: pd.Series) -> pd.DataFrame:
     rows = [_enrich_one(None if h is None else bytes(h)) for h in html]
-    return pd.DataFrame(rows, columns=[f.name for f in _ENRICH_TYPE.fields])
+    cols = list(zip(*rows)) if rows else [()] * len(_ENRICH_TYPE.fields)
+    return pd.DataFrame({
+        f.name: pd.array(list(col), dtype=_PD_DTYPES[f.dataType.simpleString()])
+        for f, col in zip(_ENRICH_TYPE.fields, cols)
+    })
 
 
 def with_enrichment(df, html_col: str = "html"):

@@ -55,6 +55,15 @@ SYSTEM_COLS = [LSN_COL, DELETED_COL]
 
 FORMAT_VERSION = 1
 
+# The table's Parquet codec, passed as a writer option on every data
+# file, manifest and side output the engine writes — never taken from
+# the session, whose default (snappy) would make the bytes a table writes
+# depend on who built the session. On page payloads zstd writes 44% fewer
+# bytes than snappy (perfbench backfill, BENCH.md). Readers take any
+# codec, so older snappy files stay readable and turn zstd at their
+# bucket's next rewrite.
+PARQUET_CODEC = "zstd"
+
 
 class CommitConflict(Exception):
     """Another writer committed since this table handle loaded metadata."""
@@ -139,7 +148,7 @@ def _atomic_write_manifest(path: str, entries: list[dict]) -> None:
         n: [e.get(n) for e in entries] for n, _ in _MANIFEST_SCHEMA_COLS
     }
     tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-    pq.write_table(pa.table(cols, schema=schema), tmp)
+    pq.write_table(pa.table(cols, schema=schema), tmp, compression=PARQUET_CODEC)
     os.rename(tmp, path)
 
 
@@ -488,22 +497,20 @@ class LakeTable:
             df = df.select([c for c in cur_names if c not in SYSTEM_COLS])
         return df
 
+    def key_type(self) -> str:
+        """Spark type (simpleString) of the key column in the current
+        schema — what ``bucket_expr`` and the delta blooms hash."""
+        return self.schema().by_name()[self.key_col].type
+
     def key_bucket(self, key_value) -> int:
         """The bucket a key lives in, computed WITHOUT Spark: the pure-
         python xxh64 (bit-verified against the JVM in
         tests/test_oracle_pyref.py) applied exactly as ``bucket_expr``
-        does. String and integral keys supported (the two key types the
-        writer's xxhash64 bucketing is defined over here)."""
-        from datax_spark.oracle.xxh64 import spark_xxhash64
+        does, hashing the key as the table's key column type (string and
+        byte/short/int/bigint keys)."""
+        from datax_spark.oracle.xxh64 import key_hash_arg, spark_xxhash64
 
-        if isinstance(key_value, str):
-            h = spark_xxhash64(("str", key_value))
-        elif isinstance(key_value, bool):
-            raise TypeError("boolean keys are not bucketable")
-        elif isinstance(key_value, int):
-            h = spark_xxhash64(("long", key_value))
-        else:
-            raise TypeError(f"unsupported key type {type(key_value).__name__}")
+        h = spark_xxhash64(key_hash_arg(key_value, self.key_type()))
         return int(h % self.num_buckets)
 
     def lookup(self, key_value, snapshot_id: int | None = None) -> DataFrame:
@@ -519,12 +526,14 @@ class LakeTable:
 
         b = self.key_bucket(key_value)
         m = self._require_meta()
+        key_type = self.key_type()
 
         def keep(e: dict) -> bool:
             if e.get("kind") != "delta" or not e.get("key_bloom"):
                 return True
             return might_contain_python(
-                e["key_bloom"], e["bloom_bits"], e["bloom_hashes"], key_value
+                e["key_bloom"], e["bloom_bits"], e["bloom_hashes"], key_value,
+                key_type,
             )
 
         return self.read(
@@ -593,7 +602,7 @@ class LakeTable:
                 .repartition(F.col(BUCKET_COL))
                 .select(*(ts.field_names() + [BUCKET_COL]))
             )
-        writer = out.write
+        writer = out.write.option("compression", PARQUET_CODEC)
         if max_records_per_file is None:
             # table-level default for buckets that outgrow one file
             max_records_per_file = self._require_meta()["properties"].get(

@@ -35,6 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from datax_spark.oracle.xxh64 import key_hash_arg, spark_xxhash64
+
 __all__ = [
     "BloomFilter",
     "bloom_build",
@@ -196,58 +198,46 @@ def bucket_blooms_local(
     the python hash does not cover (callers fall back to the
     distributed build)."""
     import pyarrow.parquet as pq
-
-    from datax_spark.oracle.xxh64 import spark_xxhash64
+    from pyspark.sql.pandas.types import from_arrow_type
 
     out: dict[int, np.ndarray] = {}
     for path, bucket in file_buckets:
         col = pq.read_table(path, columns=[key_col])[key_col]
+        # hash as the Spark type the distributed build reads the column as
+        key_type = from_arrow_type(col.type).simpleString()
         w = out.setdefault(bucket, np.zeros(num_bits // 64, dtype=np.uint64))
         for v in col.to_pylist():
             if v is None:
                 continue
-            if isinstance(v, str):
-                pair = ("str", v)
-            elif isinstance(v, bool) or not isinstance(v, int):
-                raise TypeError(
-                    f"unsupported bloom key type {type(v).__name__}")
-            else:
-                pair = ("long", v)
-            h1 = spark_xxhash64(pair, ("int", 0x5EED1)) % num_bits
-            h2 = spark_xxhash64(pair, ("int", 0x5EED2)) % num_bits
-            for i in range(num_hashes):
-                p = (h1 + i * h2) % num_bits
+            for p in _positions_python(v, key_type, num_bits, num_hashes):
                 w[p >> 6] |= np.uint64(1 << (p & 63))
     return {b: w.tobytes() for b, w in out.items()}
 
 
+def _positions_python(key_value, key_type: str, num_bits: int, num_hashes: int):
+    """:func:`_positions` for one key on the driver, through the pure-python
+    xxh64 (bit-verified against Spark) and the lake's key-hash rule."""
+    arg = key_hash_arg(key_value, key_type)
+    h1 = spark_xxhash64(arg, ("int", 0x5EED1)) % num_bits
+    h2 = spark_xxhash64(arg, ("int", 0x5EED2)) % num_bits
+    return [(h1 + i * h2) % num_bits for i in range(num_hashes)]
+
+
 def might_contain_python(
-    words: bytes, num_bits: int, num_hashes: int, key_value
+    words: bytes, num_bits: int, num_hashes: int, key_value,
+    key_type: str = "string",
 ) -> bool:
     """Driver-side probe of a stored bloom, bit-identical to the JVM
     build: the pure-python xxh64 (oracle/xxh64.py, bit-verified against
-    Spark) replays ``_positions`` exactly. String keys hash as StringType
-    columns, ints as LongType — the same mapping as
-    ``LakeTable.key_bucket``. Used by manifest-level file skipping where
-    no Spark job should run at all (a point lookup's planning step)."""
-    from datax_spark.oracle.xxh64 import spark_xxhash64
-
-    if isinstance(key_value, str):
-        pair = ("str", key_value)
-    elif isinstance(key_value, bool):
-        raise TypeError("boolean keys are not bloom-indexable")
-    elif isinstance(key_value, int):
-        pair = ("long", key_value)
-    else:
-        raise TypeError(f"unsupported key type {type(key_value).__name__}")
-    h1 = spark_xxhash64(pair, ("int", 0x5EED1)) % num_bits
-    h2 = spark_xxhash64(pair, ("int", 0x5EED2)) % num_bits
+    Spark) replays ``_positions`` exactly, hashing ``key_value`` as a
+    column of Spark type ``key_type`` (the lake passes its key column's
+    type). Used by manifest-level file skipping where no Spark job should
+    run at all (a point lookup's planning step)."""
     arr = np.frombuffer(words, dtype=np.uint64)
-    for i in range(num_hashes):
-        p = (h1 + i * h2) % num_bits
-        if not (int(arr[p >> 6]) >> (p & 63)) & 1:
-            return False
-    return True
+    return all(
+        (int(arr[p >> 6]) >> (p & 63)) & 1
+        for p in _positions_python(key_value, key_type, num_bits, num_hashes)
+    )
 
 
 def bloom_semi_join(

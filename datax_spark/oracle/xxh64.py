@@ -8,8 +8,10 @@ argument i becomes the seed for argument i+1; NULL arguments are
 skipped. Default seed 42, result exposed as a signed 64-bit long —
 exactly the column value Spark produces.
 
-Used only by the oracle pyrefs (see package docstring); the engine
-itself always calls the JVM expression.
+Used by the oracle pyrefs (see package docstring) and by the lake's
+driver-side key math (bucket of a key, delta key blooms), which must
+hash a key exactly as ``F.xxhash64`` hashes the table's key column —
+see :func:`key_hash_arg`.
 """
 
 from __future__ import annotations
@@ -125,3 +127,29 @@ def spark_xxhash64(*args) -> int:
         else:
             raise ValueError(f"unknown kind {kind!r}")
     return _to_signed(h)
+
+
+# Spark's xxhash64 dispatch for the key column types the lake buckets
+# by: byte/short/int columns go through hashInt, bigint through hashLong,
+# strings through their UTF-8 bytes.
+_KEY_HASH_KINDS = {
+    "string": "str", "tinyint": "int", "smallint": "int", "int": "int", "bigint": "long",
+}
+
+
+def key_hash_arg(value, key_type: str) -> tuple[str, object]:
+    """The ``(kind, value)`` argument of :func:`spark_xxhash64` that hashes
+    ``value`` as ``F.xxhash64`` hashes a key column of Spark type
+    ``key_type`` (a simpleString such as ``"int"``). The one rule for how
+    a lake key hashes: an IntegerType key must go through hashInt, or its
+    bucket and bloom bits differ from the JVM's. Raises TypeError for
+    values or types the lake cannot bucket."""
+    if isinstance(value, bool):
+        raise TypeError("boolean keys are not bucketable")
+    kind = _KEY_HASH_KINDS.get(key_type)
+    if kind is None:
+        raise TypeError(f"unsupported key column type {key_type!r}")
+    if not isinstance(value, str if kind == "str" else int):
+        raise TypeError(
+            f"key {value!r} ({type(value).__name__}) does not match key column type {key_type}")
+    return kind, value

@@ -16,6 +16,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
+from datax_spark.lake.table import PARQUET_CODEC
+
 VALID_OPS = ("I", "U", "D")
 
 
@@ -86,6 +88,7 @@ def write_quarantine(tagged: DataFrame, quarantine_dir: str, batch_id: int | Non
         tagged.filter(F.col("_dirty_reason").isNotNull())
         .withColumn("_batch_id", F.lit(batch_id).cast("bigint"))
         .write.mode("append")
+        .option("compression", PARQUET_CODEC)
         .parquet(quarantine_dir)
     )
 
@@ -101,12 +104,7 @@ def _split_on_reason(
     dirty_count = tagged.filter(F.col("_dirty_reason").isNotNull()).count()
     if dirty_count:
         if quarantine_dir:
-            (
-                tagged.filter(F.col("_dirty_reason").isNotNull())
-                .withColumn("_batch_id", F.lit(batch_id).cast("bigint"))
-                .write.mode("append")
-                .parquet(quarantine_dir)
-            )
+            write_quarantine(tagged, quarantine_dir, batch_id)
         if limits is not None:
             total = batch.count()
             limits.check(dirty_count, total)

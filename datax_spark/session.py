@@ -7,6 +7,13 @@ job-wide defaults are session confs: UTC session timezone (DataX defaults
 GMT+8 via ``core/src/main/conf/core.json`` ``common.column.timeZone``; we
 standardize on UTC and make offsets explicit in tests), Arrow-enabled
 pandas UDFs, and AQE for runtime skew handling.
+
+The session sets no Parquet codec: the lake table owns it
+(``lake.table.PARQUET_CODEC``, zstd) and passes it as a writer option on
+every file the engine writes, so a table's bytes are the same under this
+factory and under a caller's bare session. Writers a job configures
+(``config.py``'s ``parquetwriter`` / ``txtfilewriter``) keep the session
+default or their own ``compress`` option.
 """
 
 from __future__ import annotations
@@ -87,7 +94,6 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("DATAX_SPARK_ARROW_BATCH", "1024"),
         )
-        .config("spark.sql.parquet.compression.codec", "snappy")
         # INT96 (Spark's legacy default) writes NO parquet column
         # statistics, which silently disables footer-derived manifest
         # stats (zone maps, per-file lsn ranges on ts-typed columns) and

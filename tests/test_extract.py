@@ -66,3 +66,28 @@ def test_fast_paths_match_regex_reference():
         n_alpha, n_punct = _char_class_counts(s)
         assert n_alpha == len(_NON_ALPHA_RE.sub("", s)), repr(s)
         assert n_punct == len(_PUNCT_RE.findall(s)), repr(s)
+
+
+def test_enrich_fp_exact_when_batch_holds_null_html(spark):
+    """One Arrow batch mixing null and non-null html (a delete winner
+    beside live pages) must keep ``fp`` and ``n_tokens`` 64-bit exact:
+    ``fp`` is the signed first 8 bytes of md5(text), not that value
+    rounded through float64."""
+    import hashlib
+
+    from datax_spark.functions.extract import with_enrichment
+
+    pages = pages_df(spark, 120, partitions=1).select(
+        "url",
+        F.when(F.col("url").endswith("7"), F.lit(None)).otherwise(F.col("html")).alias("html"),
+    )
+    rows = with_enrichment(pages).select("url", "html", "text", "n_tokens", "fp").collect()
+    nulls = [r for r in rows if r["html"] is None]
+    live = [r for r in rows if r["html"] is not None]
+    assert nulls and live
+    assert all(r["fp"] is None and r["n_tokens"] is None for r in nulls)
+    for r in live:
+        want = int.from_bytes(hashlib.md5(r["text"].encode("utf-8")).digest()[:8],
+                              "big", signed=True)
+        assert r["fp"] == want, (r["url"], r["fp"], want)
+        assert r["n_tokens"] == len(r["text"].split())

@@ -334,21 +334,25 @@ def test_stats_manifest_report(spark, tmp_table_root):
 def test_driver_bloom_build_bit_identical(spark, tmp_path):
     """r6: trickle-sized delta writes build their key blooms on the
     driver (bucket_blooms_local) instead of via a Spark job — the bytes
-    must be identical to the distributed build, for string AND long
-    keys, so manifest pruning semantics cannot depend on batch size."""
+    must be identical to the distributed build, for string, int AND long
+    keys, so manifest pruning semantics cannot depend on batch size; the
+    python probe answers yes for every key written under its column type."""
     import glob
     import os
 
     from pyspark.sql import functions as F
 
-    from datax_spark.operators.bloom import bucket_blooms, bucket_blooms_local
+    from datax_spark.operators.bloom import (
+        bucket_blooms, bucket_blooms_local, might_contain_python)
 
-    for typ in ("str", "long"):
+    keys = {
+        "string": F.concat(F.lit("k-"), F.col("id").cast("string")),
+        "int": F.col("id").cast("int"),
+        "bigint": F.col("id"),
+    }
+    for typ, key in keys.items():
         df = spark.range(300).select(
-            (F.concat(F.lit("k-"), F.col("id").cast("string"))
-             if typ == "str" else F.col("id")).alias("k"),
-            F.pmod(F.col("id"), F.lit(4)).alias("_bucket"),
-        )
+            key.alias("k"), F.pmod(F.col("id"), F.lit(4)).alias("_bucket"))
         out = str(tmp_path / f"bl_{typ}")
         df.write.partitionBy("_bucket").parquet(out)
         dist = bucket_blooms(
@@ -362,6 +366,49 @@ def test_driver_bloom_build_bit_identical(spark, tmp_path):
         assert set(dist) == set(local) == {0, 1, 2, 3}
         for b in dist:
             assert dist[b] == local[b], (typ, b)
+        for i in range(300):
+            k = f"k-{i}" if typ == "string" else i
+            assert might_contain_python(dist[i % 4], 1 << 12, 5, k, typ), (typ, i)
+
+
+@pytest.mark.parametrize("key_type", [T.IntegerType(), T.LongType()])
+def test_integer_key_lookup_finds_every_key(spark, tmp_table_root, key_type):
+    """``key_bucket`` and the delta blooms hash a key as the table's key
+    column type: on an IntegerType key that is Spark's hashInt, not
+    hashLong, so the python bucket of every key matches
+    ``bucket_expr`` and ``lookup`` finds every key — through base files
+    and through merge-on-read deltas whose blooms the driver built."""
+    import datetime as _dt
+
+    from datax_spark.lake.table import bucket_expr
+
+    t = LakeTable.create(
+        spark, tmp_table_root,
+        T.StructType([T.StructField("k", key_type, False),
+                      T.StructField("ts", T.TimestampType(), True),
+                      T.StructField("v", T.StringType(), True)]),
+        key_col="k", num_buckets=8,
+    )
+    n = 48
+    bulk_load(t, spark.range(n).select(
+        F.col("id").cast(key_type).alias("k"),
+        F.lit(_dt.datetime(2024, 1, 1)).cast("timestamp").alias("ts"),
+        F.concat(F.lit("base-"), F.col("id").cast("string")).alias("v")))
+    jvm = {r["k"]: r["b"] for r in spark.range(n).select(
+        F.col("id").cast(key_type).alias("k")).select(
+        "k", bucket_expr("k", 8).alias("b")).collect()}
+    assert all(t.key_bucket(k) == b for k, b in jvm.items())
+
+    upd = spark.createDataFrame(
+        [(k, _dt.datetime(2024, 1, 2), f"delta-{k}", 1000 + k, "U") for k in range(0, n, 3)],
+        T.StructType([T.StructField("k", key_type), T.StructField("ts", T.TimestampType()),
+                      T.StructField("v", T.StringType()), T.StructField("lsn", T.LongType()),
+                      T.StructField("op", T.StringType())]))
+    merge_into(t, upd, ts_col="ts", batch_id=0, merge_mode="mor")
+    assert any(e["kind"] == "delta" and e.get("key_bloom") for e in t.manifest())
+    for k in range(n):
+        want = f"delta-{k}" if k % 3 == 0 else f"base-{k}"
+        assert [(r["k"], r["v"]) for r in t.lookup(k).collect()] == [(k, want)], k
 
 
 def test_trickle_delta_write_uses_driver_bloom(spark, tmp_table_root, monkeypatch):
