@@ -5,7 +5,8 @@ TaskGroup → reader/writer threads, SURVEY §3): Spark's file-stream source
 tails a directory of LSN-ordered change files (the stand-in for a
 binlog/LogHub/OTS-stream shard set — ``otsstreamreader/.../
 OTSStreamReaderMasterProxy.java:82-117`` shard→task assignment becomes
-source partitioning), and every micro-batch runs ``apply_changes`` inside
+source partitioning), and every micro-batch runs :func:`apply_batch` — the
+one batch step the job config's ``lakemerger`` writer shares — inside
 ``foreachBatch``.
 
 Exactly-once = Spark checkpoint (offset WAL + commit log — the engine-side
@@ -23,10 +24,13 @@ from __future__ import annotations
 
 import json
 import os
+import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
 from datax_spark.cdc.apply import apply_changes
+from datax_spark.hooks import invoke_hooks
 from datax_spark.lake.table import LakeTable
 from datax_spark.quarantine import ErrorLimits
 
@@ -43,16 +47,21 @@ CHANGE_SCHEMA = T.StructType(
 
 
 def write_metrics(table_root: str, metrics: dict) -> None:
+    """Append one per-batch row to ``<table>/metrics``. Every call writes
+    a new file named by its wall-clock time, so a fence-skipped replay,
+    a fresh checkpoint epoch (batch ids restart at 0) or an unfenced job
+    (no batch id) never overwrites an earlier row."""
     mdir = os.path.join(table_root, "metrics")
     os.makedirs(mdir, exist_ok=True)
-    path = os.path.join(
-        mdir, f"batch-{metrics.get('stream_id','default')}-{metrics.get('batch_id')}.json"
-    )
-    with open(path, "w") as f:
+    name = (f"batch-{time.time_ns():020d}-{metrics.get('stream_id', 'default')}"
+            f"-{metrics.get('batch_id')}.json")
+    with open(os.path.join(mdir, name), "w") as f:
         json.dump(metrics, f, default=str)
 
 
 def read_metrics(table_root: str) -> list[dict]:
+    """Every per-batch row of the table, in the order they were written
+    (commit order for one writer)."""
     import glob
 
     out = []
@@ -60,6 +69,105 @@ def read_metrics(table_root: str) -> list[dict]:
         with open(p) as f:
             out.append(json.load(f))
     return out
+
+
+def apply_batch(
+    table: LakeTable,
+    batch: DataFrame,
+    batch_id: int | None = None,
+    stream_id: str = "default",
+    fence_epoch: str | None = None,
+    ts_col: str = "warc_ts",
+    lsn_col: str = "lsn",
+    op_col: str = "op",
+    quarantine_dir: str | None = None,
+    error_limits: ErrorLimits | None = None,
+    transform=None,
+    merge_mode: str = "cow",
+    canonicalize_key: bool = False,
+    scd2_dir: str | None = None,
+    scd2_materialize_every: int | None = None,
+    compact_every: int | None = None,
+    compact_delta_ratio: float | None = None,
+) -> dict:
+    """The one per-batch step of ``run_stream`` and the job config's
+    ``lakemerger`` writer: optional key canonicalization → fenced
+    ``apply_changes`` → SCD2 history append → compaction triggers →
+    metrics row. Returns the ``apply_changes`` metrics dict.
+
+    ``scd2_dir``: the batch's CLEAN rows also append to the SCD Type 2
+    history table there, created on first use with the lake's key
+    column. Its fence id is built from what fences the lake —
+    ``(stream_id, fence_epoch, batch_id)`` — so the history skips exactly
+    the batches the lake skips; an unfenced call (``batch_id=None``)
+    always applies on the lake, so it gets a fresh history id too.
+    Duplicate delivery across epochs is absorbed by the history's
+    (key, lsn) dedupe. ``scd2_materialize_every=N`` fold-materializes the
+    history every N batch ids.
+
+    Compaction runs only after an applied batch: ``compact_every=N``
+    folds deltas when ``batch_id + 1`` is a multiple of N,
+    ``compact_delta_ratio=r`` folds buckets whose delta bytes exceed
+    ``r × base bytes``.
+    """
+    key = table.key_col
+    if canonicalize_key:
+        # crawl-dedup semantics: merge on the canonical url
+        from pyspark.sql import functions as F
+
+        from datax_spark.functions.urls import canonicalize_url
+
+        batch = batch.withColumn(key, canonicalize_url(F.col(key)))
+    # looked up through this module's globals, so a wrapper installed on
+    # ``pipeline.apply_changes`` sees every batch of both entry points
+    metrics = apply_changes(
+        table, batch,
+        batch_id=batch_id,
+        stream_id=stream_id,
+        ts_col=ts_col,
+        lsn_col=lsn_col,
+        op_col=op_col,
+        quarantine_dir=quarantine_dir,
+        error_limits=error_limits,
+        transform=transform,
+        fence_epoch=fence_epoch,
+        merge_mode=merge_mode,
+    )
+    if scd2_dir is not None:
+        from datax_spark.cdc.scd2 import Scd2Table
+        from datax_spark.quarantine import dirty_reason
+
+        if os.path.exists(os.path.join(scd2_dir, "_meta.json")):
+            hist = Scd2Table(table.spark, scd2_dir)
+        else:
+            hist = Scd2Table.create(table.spark, scd2_dir, key_col=key,
+                                    ts_col=ts_col, lsn_col=lsn_col, op_col=op_col)
+        if batch_id is None:
+            hist_id = f"{stream_id}-{uuid.uuid4().hex}"
+        else:
+            epoch = f"{fence_epoch[:8]}-" if fence_epoch else ""
+            hist_id = f"{stream_id}-{epoch}{int(batch_id):08d}"
+        # the history sees the same CLEAN rows the merge applied (dirty
+        # ops/null keys would corrupt interval derivation). Plain
+        # predicate, no observe(): an observed subtree reused across two
+        # sink plans can trip Catalyst attribute binding.
+        hist.append_changes(batch.filter(dirty_reason(key, op_col, lsn_col).isNull()),
+                            hist_id)
+        if (scd2_materialize_every and batch_id is not None
+                and (batch_id + 1) % scd2_materialize_every == 0):
+            hist.materialize(fold=True)
+    if not metrics.get("skipped"):
+        snap = None
+        if compact_every and batch_id is not None and (batch_id + 1) % compact_every == 0:
+            snap = table.load().compact_buckets(min_files_per_bucket=2)
+        elif compact_delta_ratio is not None:
+            snap = table.load().compact_buckets(
+                min_files_per_bucket=None, max_delta_ratio=compact_delta_ratio
+            )
+        if snap is not None:
+            metrics["compacted_snapshot"] = snap["snapshot_id"]
+    write_metrics(table.root, metrics)
+    return metrics
 
 
 def run_stream(
@@ -99,9 +207,13 @@ def run_stream(
     ``stop_after_batches`` force-kills the query mid-stream for the
     resume-from-checkpoint tests.
 
+    Every micro-batch runs :func:`apply_batch` inside ``foreachBatch``
+    (compaction included, so a batch counts as done only once its
+    compaction has committed).
+
     ``merge_mode="mor"`` appends delta files per batch instead of
     rewriting buckets (trickle-batch fast path); ``compact_every=N``
-    folds deltas into base files every N batches (count trigger), and
+    folds deltas into base files every N batch ids (count trigger), and
     ``compact_delta_ratio=r`` folds only buckets whose delta bytes exceed
     ``r × base bytes`` after any batch (size trigger — bounds read
     amplification by data volume, not batch count; manifest-stat check
@@ -117,11 +229,10 @@ def run_stream(
     ``scd2_dir``: dual-sink mode — every micro-batch's CLEAN changes
     also append to an SCD Type 2 history table (``cdc/scd2.py``) at this
     path, created on first use with the lake's key column: one stream
-    maintains the current+history table pair. The scd2 fence key embeds
-    the checkpoint epoch (batch ids restart at 0 under a fresh
-    checkpoint; duplicate delivery across epochs is absorbed by the
-    history's (key, lsn) dedupe). ``scd2_materialize_every=N``
-    fold-materializes the history every N batches (the compaction knob).
+    maintains the current+history table pair. The history fence id
+    embeds the checkpoint epoch, as the lake's does (see
+    :func:`apply_batch`). ``scd2_materialize_every=N`` fold-materializes
+    the history every N batch ids (the compaction knob).
 
     ``hooks``: job-completion callables ``(job_config, metrics) -> None``
     invoked once after the bounded replay / stop finishes (per-hook error
@@ -133,36 +244,6 @@ def run_stream(
     completion to hook.
     """
     table = LakeTable(spark, table_root).load()
-    scd2 = None
-    if scd2_dir is not None:
-        # dual sink: the SAME clean change batches also append to an SCD2
-        # history table — the classic CDC current+history pair. The scd2
-        # fence key embeds the checkpoint epoch (Spark restarts batch ids
-        # at 0 under a fresh checkpoint; a bare-int fence would silently
-        # drop the new generation's data, while duplicate-delivery across
-        # epochs is absorbed by scd2_snapshot's (key, lsn) dedupe).
-        from datax_spark.cdc.scd2 import Scd2Table
-
-        if os.path.exists(os.path.join(scd2_dir, "_meta.json")):
-            scd2 = Scd2Table(spark, scd2_dir)
-        else:
-            scd2 = Scd2Table.create(
-                spark, scd2_dir, key_col=table.key_col,
-                ts_col=ts_col, lsn_col=lsn_col,
-            )
-    if canonicalize_key:
-        from pyspark.sql import functions as F
-
-        from datax_spark.functions.urls import canonicalize_url
-
-        _key = table.key_col
-        _user_pre = pre_merge
-
-        def pre_merge(df):  # noqa: F811 — deliberate decoration of the arg
-            if _user_pre is not None:
-                df = _user_pre(df)
-            return df.withColumn(_key, canonicalize_url(F.col(_key)))
-
     seen = {"n": 0}
     applied: list[dict] = []  # THIS run's non-skipped batch metrics, in order
     # Checkpoint epoch: Spark restarts batch ids at 0 when the checkpoint
@@ -176,8 +257,6 @@ def run_stream(
         with open(epoch_path) as f:
             fence_epoch = f.read().strip()
     else:
-        import uuid
-
         fence_epoch = uuid.uuid4().hex
         with open(epoch_path, "w") as f:
             f.write(fence_epoch)
@@ -187,47 +266,27 @@ def run_stream(
             # batch-level decode hook (e.g. cells_to_changes for the
             # column-granular multi-version stream)
             batch_df = pre_merge(batch_df)
-        metrics = apply_changes(
+        metrics = apply_batch(
             table.load(),  # reload metadata each batch (fence freshness)
             batch_df,
             batch_id=batch_id,
+            stream_id=stream_id,
+            fence_epoch=fence_epoch,
             ts_col=ts_col,
             lsn_col=lsn_col,
-            stream_id=stream_id,
             quarantine_dir=quarantine_dir,
             error_limits=error_limits,
             transform=transform,
-            fence_epoch=fence_epoch,
             merge_mode=merge_mode,
+            canonicalize_key=canonicalize_key,
+            scd2_dir=scd2_dir,
+            scd2_materialize_every=scd2_materialize_every,
+            compact_every=compact_every,
+            compact_delta_ratio=compact_delta_ratio,
         )
-        if scd2 is not None:
-            # history sink sees the same CLEAN rows the merge applied
-            # (dirty ops/null keys would corrupt interval derivation);
-            # its own epoch-scoped fence makes the append idempotent.
-            # Plain predicate, no observe(): an observed subtree reused
-            # across two sink plans can trip Catalyst attribute binding.
-            from datax_spark.quarantine import dirty_reason
-
-            reason = dirty_reason(table.key_col, "op", lsn_col)
-            scd2.append_changes(
-                batch_df.filter(reason.isNull()),
-                f"{fence_epoch[:8]}-{batch_id:08d}",
-            )
-            if scd2_materialize_every and (batch_id + 1) % scd2_materialize_every == 0:
-                scd2.materialize(fold=True)
         seen["n"] += 1
         if not metrics.get("skipped"):
             applied.append(metrics)
-            snap = None
-            if compact_every and seen["n"] % compact_every == 0:
-                snap = table.load().compact_buckets(min_files_per_bucket=2)
-            elif compact_delta_ratio is not None:
-                snap = table.load().compact_buckets(
-                    min_files_per_bucket=None, max_delta_ratio=compact_delta_ratio
-                )
-            if snap is not None:
-                metrics["compacted_snapshot"] = snap["snapshot_id"]
-        write_metrics(table_root, metrics)
 
     if source_format == "shard_tail":
         # the native sharded log-tail source (sources/shardtail.py) —
@@ -307,16 +366,12 @@ def run_stream(
     # the query starts, same per-hook isolation as completion hooks
     pre_hook_results = None
     if pre_hooks:
-        from datax_spark.hooks import invoke_pre_hooks
-
-        pre_hook_results = invoke_pre_hooks(pre_hooks, job_doc)
+        pre_hook_results = invoke_hooks(pre_hooks, job_doc)
 
     def _finish(q):
         if pre_hook_results is not None:
             q.datax_pre_hook_results = pre_hook_results
         if hooks:
-            from datax_spark.hooks import invoke_hooks
-
             # THIS run's applied work only: seen['n'] also counts
             # fence-skipped batches, and read_metrics would surface a
             # PREVIOUS run's record when this run applied nothing — a
@@ -341,11 +396,9 @@ def run_stream(
             # throws "query with same id already active"; and a deadline
             # exit with backlog remaining must raise, not silently return
             # a partial replay.
-            import time as _t
-
             q.stop()  # the initial run may still be active on timeout
             q.awaitTermination(30)
-            deadline = _t.time() + (timeout_sec or 600)
+            deadline = time.time() + (timeout_sec or 600)
             while True:
                 before = seen["n"]
                 q = writer.start()
@@ -354,7 +407,7 @@ def run_stream(
                 q.awaitTermination(30)
                 if seen["n"] == before:
                     break
-                if _t.time() > deadline:
+                if time.time() > deadline:
                     raise TimeoutError(
                         f"bounded shard_tail replay still had backlog after "
                         f"{timeout_sec or 600}s of rate-limited drains "
@@ -363,11 +416,9 @@ def run_stream(
         return _finish(q)
     q = writer.start()
     if stop_after_batches is not None:
-        import time as _t
-
-        deadline = _t.time() + (timeout_sec or 300)
-        while seen["n"] < stop_after_batches and _t.time() < deadline:
-            _t.sleep(0.2)
+        deadline = time.time() + (timeout_sec or 300)
+        while seen["n"] < stop_after_batches and time.time() < deadline:
+            time.sleep(0.2)
         q.stop()
         q.awaitTermination(30)
         return _finish(q)

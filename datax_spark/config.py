@@ -40,6 +40,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from datax_spark.hooks import invoke_hooks
 from datax_spark.quarantine import ErrorLimits
 
 
@@ -207,7 +208,7 @@ def _write(df: DataFrame, spark: SparkSession, cfg: JobConfig) -> dict:
             df.show(int(p.get("limit", 20)), truncate=False)
         return {"writer": name, "rows": n}
     if name == "lakemerger":
-        from datax_spark.cdc.apply import apply_changes
+        from datax_spark.cdc.pipeline import apply_batch
         from datax_spark.lake.table import LakeTable
         from pyspark.sql import types as T
 
@@ -250,16 +251,9 @@ def _write(df: DataFrame, spark: SparkSession, cfg: JobConfig) -> dict:
                     f"lakemerger clusterBy={want!r} ignored: existing table "
                     f"at {root} pins zone_col={have!r}; run cluster_by() to "
                     f"change it", stacklevel=2)
-        if p.get("canonicalizeKey"):
-            # crawl-dedup semantics from job config: merge on the
-            # CANONICAL url (functions/urls.py) — mirrors
-            # run_stream(canonicalize_key=True)
-            from pyspark.sql import functions as F
-
-            from datax_spark.functions.urls import canonicalize_url
-
-            df = df.withColumn(table.key_col, canonicalize_url(F.col(table.key_col)))
-        m = apply_changes(
+        # the stream's per-batch step: canonicalizeKey merges on the
+        # canonical url, scd2Dir keeps the history table beside the lake
+        m = apply_batch(
             table, df,
             batch_id=p.get("batchId"),
             stream_id=p.get("streamId", "job"),
@@ -269,32 +263,9 @@ def _write(df: DataFrame, spark: SparkSession, cfg: JobConfig) -> dict:
             quarantine_dir=p.get("quarantineDir"),
             error_limits=cfg.error_limits,
             merge_mode=p.get("mergeMode", "cow"),
+            canonicalize_key=bool(p.get("canonicalizeKey")),
+            scd2_dir=p.get("scd2Dir"),
         )
-        if p.get("scd2Dir"):
-            # dual sink from job config — mirrors run_stream(scd2_dir=...)
-            import os as _os
-
-            from datax_spark.cdc.scd2 import Scd2Table
-            from datax_spark.quarantine import dirty_reason
-
-            if _os.path.exists(_os.path.join(p["scd2Dir"], "_meta.json")):
-                hist = Scd2Table(spark, p["scd2Dir"])
-            else:
-                hist = Scd2Table.create(
-                    spark, p["scd2Dir"], key_col=table.key_col,
-                    ts_col=p.get("tsColumn", "warc_ts"),
-                    lsn_col=p.get("lsnColumn", "lsn"),
-                    op_col=p.get("opColumn", "op"),
-                )
-            # plain predicate, no observe(): an observed subtree reused
-            # across two sink plans can trip Catalyst attribute binding
-            reason = dirty_reason(
-                table.key_col, p.get("opColumn", "op"), p.get("lsnColumn", "lsn")
-            )
-            hist.append_changes(
-                df.filter(reason.isNull()),
-                f"{p.get('streamId', 'job')}-{p.get('batchId')}",
-            )
         return {"writer": name, **{k: v for k, v in m.items() if k != "lineage"}}
     if name == "jdbcwriter":
         from datax_spark.sources.files import write_jdbc_batched
@@ -434,16 +405,12 @@ def run_job(spark: SparkSession, config: str | JobConfig,
                "transformers": cfg.transformers, "channels": cfg.channels}
     pre_results = None
     if pre_hooks:
-        from datax_spark.hooks import invoke_pre_hooks
-
-        pre_results = invoke_pre_hooks(pre_hooks, job_doc)
+        pre_results = invoke_hooks(pre_hooks, job_doc)
     df = _read(spark, cfg)
     df = _transform(df, cfg)
     result = _write(df, spark, cfg)
     if pre_results is not None:
         result["pre_hooks"] = pre_results
     if hooks:
-        from datax_spark.hooks import invoke_hooks
-
         result["hooks"] = invoke_hooks(hooks, job_doc, result)
     return result

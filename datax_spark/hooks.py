@@ -1,4 +1,4 @@
-"""Job-completion Hook SPI.
+"""Pre-job and job-completion Hook SPI.
 
 The reference runs external hooks after a job's post() phase, handing
 them the job configuration plus final metrics
@@ -19,37 +19,23 @@ from __future__ import annotations
 
 from typing import Callable
 
-Hook = Callable[[dict, dict], None]
+Hook = Callable[..., None]
 
 
-def invoke_hooks(hooks: list[Hook] | None, job_config: dict, metrics: dict) -> list[dict]:
-    """Run each hook with (job_config, metrics); never raises — each
-    outcome is reported as {"hook", "ok"[, "error"]} in call order."""
+def invoke_hooks(hooks: list[Hook] | None, job_config: dict, *args) -> list[dict]:
+    """Run each hook as ``hook(job_config, *args)``; never raises — each
+    outcome is reported as {"hook", "ok"[, "error"]} in call order.
+
+    One isolation loop for both hook kinds: pre-job handlers (the
+    ``JobContainer.preHandle`` analog, ``JobContainer.java:109-110,
+    312-341``) are called with the job config alone before the job body;
+    completion hooks get ``(job_config, metrics)`` after it. A failing
+    audit/setup/reporting hook is recorded and never blocks the job."""
     results = []
     for h in hooks or []:
         name = getattr(h, "__name__", None) or type(h).__name__
         try:
-            h(job_config, metrics)
-            results.append({"hook": name, "ok": True})
-        except Exception as e:  # noqa: BLE001 — hook isolation is the contract
-            results.append({"hook": name, "ok": False,
-                            "error": f"{type(e).__name__}: {e}"})
-    return results
-
-
-def invoke_pre_hooks(hooks: list | None, job_config: dict) -> list[dict]:
-    """Pre-job handler SPI — the ``JobContainer.preHandle`` analog
-    (``JobContainer.java:109-110,312-341`` loading the configured
-    handler plugin and calling ``preHandler(configuration)`` before the
-    job body). Each ``callable(job_config: dict)`` runs BEFORE read/
-    stream start with the same per-hook error isolation as
-    :func:`invoke_hooks`: a failing audit/setup handler is recorded
-    ({"hook", "ok", "error"}) and never blocks the job."""
-    results = []
-    for h in hooks or []:
-        name = getattr(h, "__name__", None) or type(h).__name__
-        try:
-            h(job_config)
+            h(job_config, *args)
             results.append({"hook": name, "ok": True})
         except Exception as e:  # noqa: BLE001 — hook isolation is the contract
             results.append({"hook": name, "ok": False,

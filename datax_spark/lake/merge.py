@@ -38,8 +38,7 @@ Scale design (round 3 — ONE exchange per copy-on-write merge):
   no second repartition for the writer. (Round 2 shipped a key-broadcast
   semi/anti target split here; it double-scanned the target and built two
   multi-million-row driver relations per bulk batch — the round-2 replay
-  regression. Kept as ``merge_mode="cow-join"`` for interleaved A/B
-  benchmarking only.)
+  regression.)
 """
 
 from __future__ import annotations
@@ -55,9 +54,6 @@ from datax_spark.lake.table import (
 )
 
 OP_COL = "op"
-# legacy cow-join tuning knobs (see merge_mode="cow-join" below)
-DEFAULT_BROADCAST_ROWS = 100_000
-DEFAULT_KEY_BROADCAST_ROWS = 5_000_000
 # buckets hash into 4× as many shuffle partitions so two large buckets
 # rarely collide into one task (balls-in-bins: ~12% collision at 4×
 # instead of ~37% at 1×); any count works for correctness because the
@@ -162,8 +158,6 @@ def merge_into(
     op_col: str = OP_COL,
     stream_id: str | None = None,
     batch_id: int | None = None,
-    broadcast_threshold_rows: int = DEFAULT_BROADCAST_ROWS,
-    key_broadcast_threshold_rows: int = DEFAULT_KEY_BROADCAST_ROWS,
     dedup: bool = True,
     summary_extra: dict | None = None,
     new_schema=None,
@@ -199,10 +193,6 @@ def merge_into(
       deltas back into base files. Right for trickle batches, where CoW
       would rewrite whole buckets for a handful of keys. Both modes
       produce byte-identical table state (same LWW ordering).
-    - ``cow-join``: the round-2 merge-join implementation (broadcast /
-      key-broadcast-split / sort-merge by ``*_threshold_rows``). Kept
-      ONLY as the interleaved A/B baseline for benchmarking the union
-      path; produces identical state.
     - ``cow-latemat``: the cow plan with the pre-dedup payload exchange
       replaced by late materialization — winners elected on a narrow
       (key, ts, lsn) scan, broadcast as ids, payload scan filtered to
@@ -273,28 +263,24 @@ def merge_into(
         else:
             aligned_cols.append(F.lit(None).cast(tmap[name].type).alias(name))
 
-    def _aligned(df):
-        return df.select(
-            F.col(op_col).alias("_cop"),
-            F.col(ts_col).cast("timestamp").alias("_cts"),
-            F.col(lsn_col).cast("bigint").alias("_clsn"),
-            *aligned_cols,
-        )
-
-    def _delta(df):
-        """Aligned changes in full table-schema shape: op→_deleted, lsn."""
-        return _aligned(df).select(
-            *[
-                (
-                    F.col("_clsn").alias(LSN_COL)
-                    if f.name == LSN_COL
-                    else (F.col("_cop") == F.lit("D")).alias(DELETED_COL)
-                    if f.name == DELETED_COL
-                    else F.col(f.name)
-                )
-                for f in tschema.fields
-            ]
-        )
+    # the changes in full table-schema shape: op → _deleted, lsn → _lsn
+    delta = c.select(
+        F.col(op_col).alias("_cop"),
+        F.col(ts_col).cast("timestamp").alias("_cts"),
+        F.col(lsn_col).cast("bigint").alias("_clsn"),
+        *aligned_cols,
+    ).select(
+        *[
+            (
+                F.col("_clsn").alias(LSN_COL)
+                if f.name == LSN_COL
+                else (F.col("_cop") == F.lit("D")).alias(DELETED_COL)
+                if f.name == DELETED_COL
+                else F.col(f.name)
+            )
+            for f in tschema.fields
+        ]
+    )
 
     if merge_mode == "mor":
         # Append-only delta write: ONE Spark job — dedup/enrichment flow
@@ -303,7 +289,7 @@ def merge_into(
         # (per-bucket lineage = the _lsn min/max + row counts the writer
         # already reads from the parquet footers). Stale/duplicate
         # versions simply lose at read-time collapse — no guard needed.
-        entries = table.write_data_files(_delta(c), tschema, kind="delta")
+        entries = table.write_data_files(delta, tschema, kind="delta")
         batch_rows = sum(e["records"] for e in entries)
         lineage: dict[int, dict] = {}
         for e in entries:
@@ -326,9 +312,8 @@ def merge_into(
             # pin the read-time collapse ordering column on first use
             properties_update={"lww_ts_col": ts_col},
         )
-    if merge_mode not in ("cow", "cow-join", "cow-latemat"):
-        raise ValueError(
-            f"unknown merge_mode {merge_mode!r} (cow|mor|cow-join|cow-latemat)")
+    if merge_mode not in ("cow", "cow-latemat"):
+        raise ValueError(f"unknown merge_mode {merge_mode!r} (cow|mor|cow-latemat)")
 
     # ---- copy-on-write: bucket pruning requires the touched-bucket set
     # BEFORE the target scan, so one stats job precedes the write. It
@@ -371,18 +356,9 @@ def merge_into(
                             batch_id=batch_id, summary_extra=summary_extra,
                             new_schema=new_schema, fence_epoch=fence_epoch)
 
-    if merge_mode in ("cow", "cow-latemat"):
-        final = cow_union_plan(table, _delta(c), sorted(touched), tschema, ts_col)
-        entries = table.write_data_files(final, tschema, prepartitioned=True)
-        strategy = "cow-union" if merge_mode == "cow" else "cow-latemat"
-    else:
-        final, c_persisted = _cow_join_legacy(
-            table, c, _aligned, tschema, sorted(touched), batch_rows,
-            key, ts_col, broadcast_threshold_rows, key_broadcast_threshold_rows,
-        )
-        entries = table.write_data_files(final, tschema)
-        c_persisted.unpersist()
-        strategy = "cow-join"
+    final = cow_union_plan(table, delta, sorted(touched), tschema, ts_col)
+    entries = table.write_data_files(final, tschema, prepartitioned=True)
+    strategy = "cow-union" if merge_mode == "cow" else "cow-latemat"
     extra = {"lineage": lineage, "batch_rows": batch_rows, "merge_strategy": strategy}
     extra.update(summary_extra or {})
     return table.commit(
@@ -396,86 +372,3 @@ def merge_into(
         fence_epoch=fence_epoch,
     )
 
-
-def _cow_join_legacy(
-    table, c, _aligned, tschema, touched, batch_rows,
-    key, ts_col, broadcast_threshold_rows, key_broadcast_threshold_rows,
-):
-    """Round-2 merge-join CoW (broadcast / key-split / SMJ). Benchmark
-    baseline only — see merge_mode='cow-join'. Returns (final DF,
-    persisted change handle for the caller to unpersist after writing)."""
-    from pyspark import StorageLevel
-
-    c_aligned = _aligned(c).persist(StorageLevel.MEMORY_AND_DISK)
-    use_broadcast = 0 < batch_rows <= broadcast_threshold_rows
-    use_key_split = (not use_broadcast) and batch_rows <= key_broadcast_threshold_rows
-    c_side = F.broadcast(c_aligned) if use_broadcast else c_aligned
-
-    target = table.read(buckets=touched, include_deleted=True, include_system=True)
-    t_aligned_cols = []
-    for f in tschema.fields:
-        if f.name in target.columns:
-            t_aligned_cols.append(F.col(f.name).cast(f.type).alias(f.name))
-        else:
-            t_aligned_cols.append(F.lit(None).cast(f.type).alias(f.name))
-    target = target.select(*t_aligned_cols)
-
-    t_pref = target.select(*[F.col(cn).alias(f"_t_{cn}") for cn in target.columns])
-    untouched = None
-    if use_key_split:
-        c_keys = c_aligned.select(F.col(key).alias("_k"))
-        t_matched = t_pref.join(
-            F.broadcast(c_keys), t_pref[f"_t_{key}"] == F.col("_k"), "left_semi"
-        )
-        untouched = t_pref.join(
-            F.broadcast(c_keys), t_pref[f"_t_{key}"] == F.col("_k"), "left_anti"
-        ).select(*[F.col(f"_t_{f.name}").alias(f.name) for f in tschema.fields])
-        joined = t_matched.join(c_side, t_matched[f"_t_{key}"] == c_side[key], "left")
-    else:
-        joined = t_pref.join(c_side, t_pref[f"_t_{key}"] == c_side[key], "left")
-
-    c_newer = F.col(key).isNotNull() & (
-        (F.col("_cts") > F.col(f"_t_{ts_col}"))
-        | ((F.col("_cts") == F.col(f"_t_{ts_col}")) & (F.col("_clsn") > F.col(f"_t_{LSN_COL}")))
-        | (
-            F.col(f"_t_{ts_col}").isNull()
-            & (F.col("_cts").isNotNull() | (F.col("_clsn") > F.col(f"_t_{LSN_COL}")))
-        )
-    )
-
-    def pick(name: str):
-        if name == LSN_COL:
-            win = F.col("_clsn")
-            lose = F.col(f"_t_{LSN_COL}")
-        elif name == DELETED_COL:
-            win = F.col("_cop") == F.lit("D")
-            lose = F.col(f"_t_{DELETED_COL}")
-        elif name == key:
-            return F.col(f"_t_{key}").alias(key)
-        elif name == ts_col:
-            win, lose = F.col("_cts"), F.col(f"_t_{ts_col}")
-        else:
-            win, lose = F.col(name), F.col(f"_t_{name}")
-        return F.when(c_newer, win).otherwise(lose).alias(name)
-
-    survivors = joined.select(*[pick(f.name) for f in tschema.fields])
-    if untouched is not None:
-        survivors = survivors.unionByName(untouched)
-
-    t_keys = target.select(key)
-    inserts = (
-        c_aligned.join(t_keys, on=key, how="left_anti")
-        .select(
-            *[
-                (
-                    F.col("_clsn").alias(LSN_COL)
-                    if f.name == LSN_COL
-                    else (F.col("_cop") == F.lit("D")).alias(DELETED_COL)
-                    if f.name == DELETED_COL
-                    else F.col(f.name)
-                )
-                for f in tschema.fields
-            ]
-        )
-    )
-    return survivors.unionByName(inserts), c_aligned

@@ -94,12 +94,6 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             os.environ.get("DATAX_SPARK_ARROW_BATCH", "1024"),
         )
-        # INT96 (Spark's legacy default) writes NO parquet column
-        # statistics, which silently disables footer-derived manifest
-        # stats (zone maps, per-file lsn ranges on ts-typed columns) and
-        # row-group pruning on timestamps; MICROS is Spark's own internal
-        # representation, so the round-trip is exact.
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("DATAX_SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -113,6 +107,8 @@ def get_spark(
         # via extra_conf for CPU-starved deployments.
         .config("spark.io.compression.codec", os.environ.get("DATAX_SPARK_IO_CODEC", "zstd"))
     )
+    for k, v in ENGINE_CORRECTNESS_CONFS.items():
+        builder = builder.config(k, v)
     # generic env passthrough for A/B harnesses driving fresh-subprocess
     # sessions (e.g. bench.py --replay-child): "k=v;k=v"
     for pair in filter(None, os.environ.get("DATAX_SPARK_EXTRA_CONF", "").split(";")):

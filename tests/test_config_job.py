@@ -267,3 +267,45 @@ def test_lakemerger_scd2_dual_sink_from_config(spark, tmp_path):
     n_hist = hist.history().count()
     run_job(spark, cfg)  # fenced on both sinks
     assert hist.history().count() == n_hist
+
+
+def test_lakemerger_scd2_unfenced_runs_all_reach_history(spark, tmp_path):
+    """Without a batchId the lake applies every run, so the history must
+    too: a second run with new changes lands in both sinks, current()
+    still equals the lake's live state, and each run keeps its own
+    metrics row."""
+    from datax_spark.cdc.generator import changes_df
+    from datax_spark.cdc.pipeline import read_metrics
+    from datax_spark.cdc.scd2 import Scd2Table
+    from datax_spark.lake.table import LakeTable
+
+    root = str(tmp_path / "table")
+    hist_dir = str(tmp_path / "hist")
+    ch = changes_df(spark, 600, n_keys=120, partitions=2)
+    srcs = [str(tmp_path / "c1"), str(tmp_path / "c2")]
+    ch.filter("lsn <= 300").write.parquet(srcs[0])
+    ch.filter("lsn > 300").write.parquet(srcs[1])
+
+    def cfg(src):
+        return JobConfig.from_json(json.dumps({
+            "job": {"content": [{
+                "reader": {"name": "changereader", "parameter": {"path": src}},
+                "writer": {"name": "lakemerger", "parameter": {
+                    "path": root, "keyColumn": "url", "numBuckets": 4,
+                    "scd2Dir": hist_dir}},
+            }]}
+        }))
+
+    run_job(spark, cfg(srcs[0]))
+    hist = Scd2Table(spark, hist_dir)
+    n1 = hist.history().count()
+    run_job(spark, cfg(srcs[1]))
+    assert hist.history().count() > n1
+
+    live = LakeTable(spark, root).load().read().select("url", "lang")
+    cur = hist.current().select("url", "lang")
+    assert live.exceptAll(cur).count() == 0 and cur.exceptAll(live).count() == 0
+
+    rows = read_metrics(root)
+    assert [(m["batch_id"], m["skipped"]) for m in rows] == [(None, False), (None, False)]
+    assert [m["rows_in"] for m in rows] == [300, 300]

@@ -172,30 +172,6 @@ def test_merge_only_rewrites_touched_buckets(spark, tmp_path):
     assert t.read().count() == 400
 
 
-def test_union_and_legacy_join_paths_agree(spark, tmp_path):
-    ch = changes_df(spark, 3000, n_keys=500, partitions=4).cache()
-    t1 = _table(spark, str(tmp_path / "u"))
-    t2 = _table(spark, str(tmp_path / "jb"))
-    t3 = _table(spark, str(tmp_path / "jk"))
-    t4 = _table(spark, str(tmp_path / "js"))
-    # seed all with identical base state so every arm has matched and
-    # unmatched target rows to handle
-    base = ch.filter(F.col("lsn") <= 1000)
-    tail = ch.filter(F.col("lsn") > 1000)
-    for t in (t1, t2, t3, t4):
-        merge_into(t, base, batch_id=0)
-    merge_into(t1, tail, batch_id=1)  # union-collapse (default cow)
-    merge_into(t2, tail, batch_id=1, merge_mode="cow-join")  # broadcast join
-    merge_into(t3, tail, batch_id=1, merge_mode="cow-join",
-               broadcast_threshold_rows=0)  # key-split join
-    merge_into(t4, tail, batch_id=1, merge_mode="cow-join",
-               broadcast_threshold_rows=0,
-               key_broadcast_threshold_rows=0)  # plain SMJ
-    _assert_same(_state(t1), _state(t2))
-    _assert_same(_state(t2), _state(t3))
-    _assert_same(_state(t3), _state(t4))
-
-
 def test_mor_writes_deltas_only_and_compaction_folds(spark, tmp_path):
     from datax_spark.lake.merge import bulk_load
 

@@ -222,3 +222,39 @@ def test_multi_source_union_ingest(spark, tmp_path):
     with _pt.raises(ValueError, match="source dir list"):
         run_stream(spark, [src_a], root, ckpt,
                    available_now=True, timeout_sec=60)
+
+
+def test_apply_batch_fence_skip_keeps_applied_metrics_row(spark, tmp_path):
+    """A fence-skipped replay of a batch adds its own metrics row and
+    leaves the applied batch's lineage row in place."""
+    from datax_spark.cdc.pipeline import apply_batch
+
+    root = str(tmp_path / "table")
+    ch = changes_df(spark, 300, n_keys=60, partitions=2)
+    schema = T.StructType([f for f in CHANGE_SCHEMA.fields if f.name not in ("lsn", "op")])
+    t = LakeTable.create(spark, root, schema, key_col="url", num_buckets=2)
+    first = apply_batch(t, ch, batch_id=0, stream_id="s")
+    second = apply_batch(LakeTable(spark, root).load(), ch, batch_id=0, stream_id="s")
+    assert not first["skipped"] and second["skipped"]
+    rows = read_metrics(root)
+    assert [(m["batch_id"], m["skipped"]) for m in rows] == [(0, False), (0, True)]
+    assert rows[0]["lineage"] and rows[0]["snapshot_id"] == first["snapshot_id"]
+
+
+def test_metrics_rows_kept_in_commit_order_across_checkpoints(spark, tmp_path):
+    """Twelve one-file batches through one checkpoint, then again through
+    a fresh one (batch ids restart at 0): every applied batch keeps its
+    row, and read_metrics returns them in commit order."""
+    base = str(tmp_path)
+    src, root = f"{base}/src", f"{base}/table"
+    ch = changes_df(spark, 1200, n_keys=200, partitions=2).cache()
+    _write_change_files(spark, ch, src, 12, base)
+    schema = T.StructType([f for f in CHANGE_SCHEMA.fields if f.name not in ("lsn", "op")])
+    LakeTable.create(spark, root, schema, key_col="url", num_buckets=2)
+    for ckpt in ("ckpt1", "ckpt2"):
+        run_stream(spark, src, root, f"{base}/{ckpt}", max_files_per_trigger=1,
+                   available_now=True, timeout_sec=300, merge_mode="mor")
+    applied = [m for m in read_metrics(root) if not m["skipped"]]
+    assert [m["batch_id"] for m in applied] == list(range(12)) * 2
+    snaps = [m["snapshot_id"] for m in applied]
+    assert snaps == sorted(snaps) and len(set(snaps)) == 24
